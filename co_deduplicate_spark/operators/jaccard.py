@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .minhash import kernel_tasks
+
 
 def token_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                shingle_k: int = 1, fold: bool = True) -> DataFrame:
@@ -191,6 +193,15 @@ def verify_candidates(candidates: DataFrame, docs: DataFrame, id_col: str = "doc
     pruned = docs.join(
         cand_docs.withColumnRenamed("doc", id_col), id_col, "left_semi"
     )
+    # The kernel would otherwise run one task per partition of the docs
+    # scan. A few candidates (one arrival's) hold at most two docs per
+    # pair, counted from the checkpointed blocks: shuffle just those rows
+    # into as many tasks as they need. Many candidates keep the scan's
+    # own parallelism.
+    spark = cand.sparkSession
+    n_tasks = kernel_tasks(spark, 2 * cand.count())
+    if n_tasks < spark.sparkContext.defaultParallelism:
+        pruned = pruned.repartition(n_tasks, id_col)
     # Shingle-set table feeds both join sides — materialize once.
     ts = token_sets(pruned, id_col, text_col, shingle_k, fold=fold).localCheckpoint()
 

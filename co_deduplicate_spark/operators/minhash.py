@@ -165,28 +165,50 @@ def minhash_signature_udf(cfg: DedupConfig):
     return sig
 
 
+# Rows one Arrow-kernel task should carry. A pandas-UDF task costs about
+# 40 ms of Python-worker overhead even when its partition is empty, and the
+# kernels take about 0.2 ms per 150-token page, so a task with fewer rows
+# mostly pays overhead.
+KERNEL_ROWS_PER_TASK = 256
+
+
+def kernel_tasks(spark, n_rows: int) -> int:
+    """Task count for an Arrow kernel over ``n_rows`` rows: one task per
+    KERNEL_ROWS_PER_TASK rows, at least one, at most the session's default
+    parallelism."""
+    dp = spark.sparkContext.defaultParallelism
+    return max(1, min(dp, -(-n_rows // KERNEL_ROWS_PER_TASK)))
+
+
 def with_minhash(docs: DataFrame, cfg: DedupConfig, id_col: str = "doc_id",
                  text_col: str = "text", repartition: int | None = 0) -> DataFrame:
     """(id, minhash array<long>, n_shingles int) signature table.
 
-    The Arrow kernel parallelizes per-partition, and parquet inputs often
-    arrive as one or two files — so by default the projection is
-    repartitioned to the session's default parallelism before the UDF
-    (``repartition=None`` disables, an int pins the count). Only (id, text)
-    are shuffled — column pruning keeps document metadata out of the
-    exchange. n_shingles (lineage counter, FIXTURES.md §3) rides along from
-    the same kernel pass via signature cardinality bookkeeping JVM-side.
+    The Arrow kernel runs once per partition of its input. ``repartition``
+    is the caller's statement of how that input should be partitioned;
+    building the plan executes nothing to find out:
+
+      * ``0`` (default): hash-repartition to the session's default
+        parallelism, for an input that may arrive under-parallel (one
+        parquet file, a small aggregate);
+      * ``n > 0``: hash-repartition to exactly ``n`` partitions. A caller
+        that knows its row count sizes the kernel to it with
+        ``kernel_tasks``: the incremental delta of one arrival runs one
+        task, not one per partition of the state it was filtered from;
+      * ``None``: keep the input's partitioning, which the caller knows is
+        already parallel (the pipeline's corpus stage, whose manifest
+        counts its files). A large scan arriving in thousands of splits
+        needs no (id, text) exchange.
+
+    Only (id, text) are shuffled — column pruning keeps document metadata
+    out of the exchange. Signatures are per-row deterministic, so
+    partitioning never affects values. n_shingles (lineage counter,
+    FIXTURES.md §3) rides along from the same kernel pass.
     """
     narrow = docs.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_text"))
     if repartition is not None:
         n = repartition or docs.sparkSession.sparkContext.defaultParallelism
-        # r6 (guide §2.4): only shuffle when the input is UNDER-parallel
-        # (e.g. a single local parquet file). A 100 TB scan already arrives
-        # in thousands of splits — the unconditional repartition was a full
-        # (id, text) exchange for nothing; signatures are per-row
-        # deterministic, so partitioning never affects values.
-        if narrow.rdd.getNumPartitions() < n:
-            narrow = narrow.repartition(n, "doc")
+        narrow = narrow.repartition(n, "doc")
     sig = minhash_signature_udf(cfg)
     return narrow.select("doc", sig(F.col("_text")).alias("_s")).select(
         "doc", F.col("_s.minhash").alias("minhash"), F.col("_s.n_shingles").alias("n_shingles")

@@ -178,7 +178,13 @@ def run_pipeline(
     if resume and cat.is_complete("signatures"):
         sigs = cat.read("signatures")
     else:
-        sigs = with_minhash(corpus, cfg, id_col="url", text_col="text")
+        # the corpus stage's manifest counts its files (one per write
+        # partition): an input read in at least default-parallelism splits
+        # feeds the kernel as it lies, anything less is repartitioned
+        n_files = cat.manifest("corpus").get("partition_profile", {}).get("n_partitions", 0)
+        parallel = n_files >= spark.sparkContext.defaultParallelism
+        sigs = with_minhash(corpus, cfg, id_col="url", text_col="text",
+                            repartition=None if parallel else 0)
         sigs = cat.write("signatures", sigs)
         # one aggregate pass for all counters (separate count() jobs add
         # serial driver round-trips that dominate small-corpus runs)

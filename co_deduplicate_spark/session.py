@@ -10,7 +10,29 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A DataFrame over a few driver-side ``rows`` (DDL ``schema``) as a
+    ``LocalRelation`` that the JVM evaluates in-process.
+
+    ``spark.createDataFrame(rows, schema)`` on a Python list builds a
+    Python-RDD scan instead: every evaluation of it runs one Python task
+    per default-parallelism slice (about 0.35 s on a 4-core host, and a
+    per-record plan evaluates its input many times). An Arrow table under
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    ``LocalRelation``, which costs no Python worker and no job of its own.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def build_session(

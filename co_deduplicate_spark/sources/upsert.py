@@ -42,6 +42,8 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 MANIFEST = "_TABLE_MANIFEST.json"
 
 
@@ -466,8 +468,8 @@ class UpsertTable:
             )
         if self.iceberg_table is not None:
             view = f"_delete_ids_{abs(hash((self.iceberg_table, self.key))) % 10**8}"
-            self.spark.createDataFrame(
-                [(str(i),) for i in ids], f"{self.key} string"
+            local_frame(
+                self.spark, [(str(i),) for i in ids], f"{self.key} string"
             ).createOrReplaceTempView(view)
             try:
                 self.spark.sql(
@@ -484,8 +486,8 @@ class UpsertTable:
         # the key to string before hashing, so ids land in the same bucket
         # as stored rows for ANY key type (a long/float/timestamp key hashed
         # raw would probe the wrong bucket and silently miss the delete)
-        id_df = self.spark.createDataFrame(
-            [(str(i),) for i in ids], f"{self.key} string"
+        id_df = local_frame(
+            self.spark, [(str(i),) for i in ids], f"{self.key} string"
         ).withColumn("_bucket", self._bucket_expr())
         touched = sorted(r["_bucket"] for r in id_df.select("_bucket").distinct().collect())
         old_rel = [m["buckets"][str(b)] for b in touched if str(b) in m["buckets"]]

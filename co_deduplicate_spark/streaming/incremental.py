@@ -41,7 +41,8 @@ from ..config import DedupConfig
 from ..operators.connected_components import attach_singletons, connected_components
 from ..operators.jaccard import verify_candidates
 from ..operators.lsh import band_table, explode_nested_bands, nested_band_table
-from ..operators.minhash import with_minhash
+from ..operators.minhash import kernel_tasks, with_minhash
+from ..session import local_frame
 
 # above this many delta rows the "broadcast the delta side" plans fall back
 # to shuffle joins — a session whose delta rivals the corpus is a rebuild,
@@ -144,8 +145,12 @@ def incremental_update(
         delta = full_corpus.join(
             kept_sigs.select(F.col("doc").alias("url")), "url", "left_anti"
         )
+        # the delta is the n_new arriving urls (plus any old url without a
+        # stored signature): size the kernel to them, not to the partitions
+        # of the corpus scan the delta is filtered from
         delta_sigs = with_minhash(
-            delta, cfg, id_col="url", text_col="text"
+            delta, cfg, id_col="url", text_col="text",
+            repartition=kernel_tasks(new_pages.sparkSession, n_new),
         ).localCheckpoint()
         sigs = kept_sigs.unionByName(delta_sigs)
     else:
@@ -208,6 +213,9 @@ def incremental_update(
     #    a new edge are re-aggregated, O(touched) rows. old_edges holds one
     #    row per pair by construction (it is this function's own output, or
     #    bootstrap-empty), so pass-through cannot introduce pair dupes.
+    #    Every touched pair carries a current-session edge, so it takes the
+    #    current session's stamp: a max() over the stamps is lexicographic,
+    #    and a "job-<hex>" arrival would keep an older "s9".
     touched_pairs = new_edges.select("src", "dst").distinct()
     touched_pairs_b = _maybe_broadcast(touched_pairs, n_new_edges)
     old_edges = old_edges.select("src", "dst", "rules", "session")
@@ -216,10 +224,8 @@ def incremental_update(
     touched_edges = (
         old_touched.unionByName(new_edges)
         .groupBy("src", "dst")
-        .agg(
-            F.array_distinct(F.flatten(F.collect_list("rules"))).alias("rules"),
-            F.max("session").alias("session"),
-        )
+        .agg(F.array_distinct(F.flatten(F.collect_list("rules"))).alias("rules"))
+        .withColumn("session", F.lit(current_session))
     )
     all_edges = old_untouched.unionByName(touched_edges)
 
@@ -355,7 +361,7 @@ def run_incremental_session(
     edges_t = UpsertTable(spark, str(wk / "edges"), key="pair", n_buckets=n_buckets)
 
     def _empty(schema: str) -> DataFrame:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     empty_edges = "src string, dst string, rules array<string>, session string"
     prev = None
@@ -492,13 +498,16 @@ def do_the_job(
     (deterministic), and NEVER affects the persisted state — only this
     returned summary.
 
-    Scale note: the result extraction scans the edges/labels tables
-    (they are keyed for MERGE, not indexed by endpoint); per-call read
-    cost is one distributed scan of each — fine for moderate state or
-    an Iceberg-backed table with endpoint bucketing, but a high-QPS
-    online service should batch arrivals into ``run_incremental_session``
-    calls instead (the reference's economics differ because Elasticsearch
-    maintains inverted indexes per field).
+    Scale note: an arrival is not O(new + affected). It costs a fixed set
+    of Spark actions — about 99 jobs for a copy arrival over 2,000 stored
+    pages on a 4-core host, where the record enters as a local relation
+    and each Arrow kernel runs one task — plus O(state) scans: the delta
+    and the verification input are filtered from the stored corpus, and
+    the reply reads back the signatures, edges and labels tables (keyed
+    for MERGE, not indexed by endpoint; ROADMAP §5). That suits moderate
+    state; a high-rate source should batch arrivals into
+    ``run_incremental_session`` calls instead (the reference's economics
+    differ because Elasticsearch maintains inverted indexes per field).
 
     Deterministic and idempotent: the default session stamp derives from
     the url, so replaying the same record converges to identical state
@@ -512,7 +521,7 @@ def do_the_job(
             "fails on missing technical.internalId, index.js:34-41)"
         )
     session = session_name or f"job-{hashlib.sha256(url.encode()).hexdigest()[:12]}"
-    pages = spark.createDataFrame([(url, text)], "url string, text string")
+    pages = local_frame(spark, [(url, text)], "url string, text string")
     out = run_incremental_session(
         spark, workdir, pages, cfg, session, n_buckets=n_buckets
     )

@@ -54,9 +54,31 @@ def test_spark_minhash_matches_python(spark):
 
 def test_spark_minhash_partitioning_invariant(spark):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    one = {r["doc"]: r["minhash"] for r in with_minhash(df.coalesce(1), CFG).collect()}
-    many = {r["doc"]: r["minhash"] for r in with_minhash(df.repartition(8), CFG).collect()}
-    assert one == many
+
+    def sigs(frame, **kw):
+        return {r["doc"]: r["minhash"] for r in with_minhash(frame, CFG, **kw).collect()}
+
+    # repartition=None: the kernel runs on the partitions it is given
+    one = sigs(df.coalesce(1), repartition=None)
+    assert one == sigs(df.repartition(8), repartition=None)
+    assert one == sigs(df, repartition=3) == sigs(df)
+
+
+def test_with_minhash_plan_runs_no_job(spark, jobs_run_by):
+    """Building the signature plan executes nothing, whatever the input
+    plan holds: the partitioning decision reads no partition count off an
+    adaptive plan with exchanges (a groupBy and a join here)."""
+    df = spark.createDataFrame(DOCS, "doc_id long, text string")
+    agg = df.groupBy("doc_id").agg(F.max("text").alias("text"))
+    joined = agg.join(df.select("doc_id"), "doc_id")
+    plans, jobs = jobs_run_by(lambda: [
+        with_minhash(src, CFG, repartition=r)
+        for src in (agg, joined) for r in (0, 2, None)
+    ])
+    assert jobs == []
+    want = {doc_id: minhash_py(text, CFG) for doc_id, text in DOCS}
+    for plan in plans:
+        assert {r["doc"]: r["minhash"] for r in plan.collect()} == want
 
 
 def test_lsh_pipeline_finds_dups(spark):

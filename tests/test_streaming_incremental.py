@@ -648,3 +648,123 @@ def test_session_state_merged_not_rewritten(spark, tmp_path):
     assert len(untouched) >= len(m1["buckets"]) - 1 and untouched
     for b in untouched:
         assert file_hashes(m2["buckets"][b]) == before[b]  # bytes untouched
+
+
+def test_touched_pair_takes_current_session(spark):
+    """ROADMAP §4(c): a pair re-matched this session is stamped with the
+    current session even when its stored stamp sorts after it — a
+    lexicographic max() would keep "s9" over a "job-<hex>" arrival and
+    misreport which session found the duplicate."""
+    old_corpus = spark.createDataFrame(
+        [("a1", DUP_TEXT), ("a2", DUP_TEXT)], "url string, text string"
+    )
+    old_edges = spark.createDataFrame(
+        [("a1", "a2", [f"minhash-lsh:k{CFG.shingle_k}"], "s9")],
+        "src string, dst string, rules array<string>, session string",
+    )
+    old_labels = spark.createDataFrame(
+        [("a1", "a1"), ("a2", "a1")], "node string, component string"
+    )
+    new_pages = spark.createDataFrame([("a2", DUP_TEXT)], "url string, text string")
+    out = incremental_update(old_corpus, old_edges, old_labels, new_pages, CFG,
+                             "job-0123abcd")
+    for table in ("touched_edges", "edges"):
+        stamps = {(r["src"], r["dst"]): r["session"] for r in out[table].collect()}
+        assert stamps == {("a1", "a2"): "job-0123abcd"}, table
+
+
+# accented, CJK and emoji text: the arrival row crosses the Python/JVM
+# boundary as Arrow UTF-8, not pickled Python strings
+NON_ASCII_TEXT = (
+    "le café où nous étions était très agréable près de la forêt l'été "
+    "dernier nous y avons mangé des crêpes à la crème 東京 ☕ naïve résumé"
+)
+
+
+def _session_reply(spark, wk, url, text, session):
+    """What do_the_job must reply for one record, derived independently:
+    feed the row to run_incremental_session as a Python-list DataFrame and
+    read the reply fields off the returned tables on the driver."""
+    from co_deduplicate_spark.streaming.incremental import run_incremental_session
+
+    row = spark.createDataFrame([(url, text)], "url string, text string")
+    out = run_incremental_session(spark, wk, row, CFG, session)
+    sig = [r["minhash"] for r in out["signatures"].collect() if r["doc"] == url]
+    dups = sorted(
+        ({"url": r["dst"] if r["src"] == url else r["src"],
+          "rules": list(r["rules"]), "session": r["session"]}
+         for r in out["edges"].collect() if url in (r["src"], r["dst"])),
+        key=lambda d: d["url"],
+    )
+    labels = {r["node"]: r["component"] for r in out["labels"].collect()}
+    comp = labels.get(url)
+    return {
+        "url": url, "session": session,
+        "is_deduplicable": bool(sig) and sig[0] is not None,
+        "duplicates": dups, "component": comp,
+        "cluster_members": sorted(n for n, c in labels.items() if c == comp),
+        "truncated": False,
+    }
+
+
+def _state_tables(spark, wk):
+    from pathlib import Path
+
+    from co_deduplicate_spark.sources.upsert import UpsertTable
+
+    return {
+        name: sorted(map(str, UpsertTable(spark, str(Path(wk) / name), key=key)
+                         .read().drop("_bucket").collect()))
+        for name, key in (("corpus", "url"), ("signatures", "doc"), ("bands", "doc"),
+                          ("labels", "node"), ("edges", "pair"))
+    }
+
+
+def test_do_the_job_matches_session_for_null_and_non_ascii_text(spark, tmp_path):
+    """do_the_job builds its one-row input as a local relation; for a NULL
+    text and a non-ASCII text its reply and persisted state must equal
+    what run_incremental_session gives when fed the same row."""
+    import shutil
+
+    from co_deduplicate_spark.streaming.incremental import (
+        do_the_job,
+        run_incremental_session,
+    )
+
+    wk_a, wk_b = str(tmp_path / "a"), str(tmp_path / "b")
+    seed = spark.createDataFrame(
+        [("fr1", NON_ASCII_TEXT), ("b1", DUP_TEXT)], "url string, text string"
+    )
+    run_incremental_session(spark, wk_a, seed, CFG, "s1")
+    shutil.copytree(wk_a, wk_b)
+
+    r_null = do_the_job(spark, wk_a, "null1", None, CFG)
+    assert r_null == _session_reply(spark, wk_b, "null1", None, r_null["session"])
+    assert not r_null["is_deduplicable"]
+    assert r_null["duplicates"] == [] and r_null["cluster_members"] == ["null1"]
+
+    r_fr = do_the_job(spark, wk_a, "fr2", NON_ASCII_TEXT, CFG)
+    assert r_fr == _session_reply(spark, wk_b, "fr2", NON_ASCII_TEXT, r_fr["session"])
+    assert r_fr["is_deduplicable"]
+    assert [d["url"] for d in r_fr["duplicates"]] == ["fr1"]
+    assert r_fr["cluster_members"] == ["fr1", "fr2"]
+    assert _state_tables(spark, wk_a) == _state_tables(spark, wk_b)
+
+
+# Spark jobs one copy arrival runs on the fixture below, at the test
+# session's 8 cores: 107 before the arrival row became a local relation,
+# the partition probe went and the kernels were sized to the delta
+COPY_ARRIVAL_MAX_JOBS = 94
+
+
+def test_do_the_job_copy_arrival_job_count(spark, tmp_path, jobs_run_by):
+    """Regression guard on the per-arrival fixed cost: a copy arrival over
+    one stored record runs at most COPY_ARRIVAL_MAX_JOBS Spark jobs."""
+    from co_deduplicate_spark.streaming.incremental import do_the_job
+
+    wk = str(tmp_path / "dtj_jobs")
+    do_the_job(spark, wk, "a1", DUP_TEXT, CFG)
+    reply, jobs = jobs_run_by(lambda: do_the_job(spark, wk, "a2", DUP_TEXT, CFG))
+    assert reply["cluster_members"] == ["a1", "a2"]
+    print(f"copy arrival ran {len(jobs)} Spark jobs")
+    assert len(jobs) <= COPY_ARRIVAL_MAX_JOBS
