@@ -233,6 +233,11 @@ _LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 class _SharedStageCache(dict):
+    """The verified-pairs cache; ``.clear()`` is its only supported
+    invalidation. Clearing it also clears ``_LABELS_CACHE``; reassigning
+    the module attribute or deleting single keys would leave checkpointed
+    label frames pinned for the life of the application."""
+
     def clear(self) -> None:  # the bench clears per pass; labels follow
         super().clear()
         _LABELS_CACHE.clear()
@@ -247,7 +252,9 @@ def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     if key not in _VERIFIED_CACHE:
         docs = _t(spark, sf_dir, "documents")
         sigs = with_minhash(docs, CFG, id_col="doc_id", text_col="text")
-        cands = candidate_pairs(band_table(sigs, CFG), CFG)
+        # candidate_pairs never materializes its input: checkpoint the
+        # bands so its self-join does not rerun the MinHash kernel per side
+        cands = candidate_pairs(band_table(sigs, CFG).localCheckpoint(), CFG)
         verified = verify_candidates(
             cands, docs, id_col="doc_id", text_col="text",
             threshold=CFG.jaccard_threshold, shingle_k=CFG.shingle_k, fold=ASCII_FOLD,
@@ -478,7 +485,7 @@ def q_simhash_values(spark, sf_dir):
 
 
 def q_simhash_hamming_pairs(spark, sf_dir):
-    """Engine 2: pigeonhole chunk join + Hamming verify (<= 3)."""
+    """Engine 2: exact multi-block join + Hamming verify (<= 3)."""
     sigs = with_simhash(_t(spark, sf_dir, "documents"), CFG, id_col="doc_id")
     return hamming_pairs(sigs, CFG)
 

@@ -34,9 +34,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import DedupConfig
 from ..functions.normalize import tokens_py
@@ -214,8 +213,3 @@ def with_minhash(docs: DataFrame, cfg: DedupConfig, id_col: str = "doc_id",
         "doc", F.col("_s.minhash").alias("minhash"), F.col("_s.n_shingles").alias("n_shingles")
     )
 
-
-def estimated_jaccard_expr(sig_a: Column, sig_b: Column, cfg: DedupConfig) -> Column:
-    """Fraction of agreeing permutation slots — the MinHash estimator."""
-    agree = F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int"))
-    return F.aggregate(agree, F.lit(0), lambda acc, x: acc + x) / F.lit(cfg.num_perms)

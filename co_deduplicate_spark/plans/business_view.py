@@ -58,6 +58,13 @@ def business_view(corpus: DataFrame, labels: DataFrame, edges: DataFrame,
     (it IS in a duplicate cluster — reference painless 216-218).
 
     Default ``max_members_inline=None`` preserves exact reference semantics.
+
+    Precondition: ``corpus`` has at most one row per ``url`` (every
+    in-repo caller passes an UpsertTable keyed by url or a url-unique
+    synthetic corpus). It is not checked. On the uncapped path cluster
+    size is the row count of the members joined to the corpus, so a
+    duplicated url would inflate it and could flip ``isDuplicate``,
+    ``hasTransDuplicate`` and the chain.
     """
     # direct neighbors with provenance, both directions (the reference's
     # adjacency list is symmetric: each member stores its own copy)
